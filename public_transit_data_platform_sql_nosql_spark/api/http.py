@@ -33,9 +33,11 @@ reference's edge behaviors:
   'null' would collide with that key: the handler merges the groups'
   time lists instead of letting one silently clobber the other.
 
-Scale/serving notes: every timetable endpoint is a point lookup on
-``stop_id`` — pass a ``.persist()``-ed (or bucketed-by-stop_id) denorm
-frame so lookups hit cached partitions instead of re-running the ETL; the
+Scale/serving notes: every timetable endpoint is ONE narrow Spark job —
+a point lookup on ``stop_id`` that shapes the stop's one document with
+array expressions, with no shuffle (queries/timetable.py).  Pass a
+``.persist()``-ed or a bucketed-by-stop_id denorm store so the lookup
+reads cached or pruned partitions instead of re-running the ETL; the
 analytics endpoints collect only ranked top-N results (see api/app.py).
 Flask itself is optional: the module import-gates it so the engine stays
 usable where Flask isn't installed.
@@ -212,8 +214,10 @@ def create_app(analytics: TransitAPI, denorm: DataFrame):
                 "times": times,
                 "count": len(times),
             })
+        # route_id breaks ties: routes with NULL short names all render
+        # as "" and may share a headsign
         groups.sort(key=lambda g: (g["route_short_name"],
-                                   g["trip_headsign"]))
+                                   g["trip_headsign"], g["route_id"]))
         return jsonify({"groups": groups, "total_count": total})
 
     # -- geo extension (the reference renders stops on a Leaflet map but

@@ -24,6 +24,8 @@ write so downstream point lookups prune partitions.
 
 from __future__ import annotations
 
+import weakref
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -119,13 +121,23 @@ def write_stop_timetables(df: DataFrame, path: str,
         df.write.mode("overwrite").parquet(path)
 
 
+# store -> "carries the stop_bucket column": a store's schema never changes,
+# and reading it costs a JVM round trip plus a JSON parse, so each store
+# pays it once, not once per lookup
+_BUCKETED: weakref.WeakKeyDictionary[DataFrame, bool] = (
+    weakref.WeakKeyDictionary())
+
+
 def point_read(store: DataFrame, stop_id: str) -> DataFrame:
-    """S8 point lookup against a doc store read back from disk.  When the
-    store carries the ``stop_bucket`` partition column, the lookup filters
-    on it FIRST so the scan prunes to one partition directory; the
-    equality on stop_id then pushes into that partition's parquet scan."""
-    if "stop_bucket" in store.columns:
-        store = store.filter(
-            F.col("stop_bucket") == _stop_bucket(F.lit(stop_id))
-        ).drop("stop_bucket")
-    return store.filter(F.col("stop_id") == stop_id)
+    """S8 point lookup against a doc store read back from disk: one filter.
+    When the store carries the ``stop_bucket`` partition column, the
+    filter also matches the stop's bucket so the scan prunes to one
+    partition directory; the equality on stop_id pushes into that
+    partition's parquet scan.  The store's columns pass through."""
+    bucketed = _BUCKETED.get(store)
+    if bucketed is None:
+        bucketed = _BUCKETED[store] = "stop_bucket" in store.columns
+    key = F.col("stop_id") == F.lit(stop_id)
+    if bucketed:
+        key = (F.col("stop_bucket") == _stop_bucket(F.lit(stop_id))) & key
+    return store.filter(key)

@@ -2,17 +2,32 @@
 reference's Mongo query service (`/root/reference/Mongo/app.py:47-244`).
 
 The reference does ``find_one`` by stop_id then filters/groups/sorts the
-``upcoming_services`` array in Python.  Here the same operations are Spark
-array expressions / explode pipelines over the denormalized DataFrame, so
-they work both interactively (cached table, partition-pruned point lookup)
-and as set-oriented batch over ALL stops at once.
+``upcoming_services`` array in Python.  Each lookup here has that shape
+too: ``point_read`` narrows the store to the stop's one document, then one
+``select`` filters, groups and sorts its ``upcoming_services`` array with
+array expressions (``filter`` / ``transform`` / ``array_distinct`` /
+``sort_array``) and ``inline``s the result into rows.  A lookup therefore
+plans as ONE narrow Spark job -- no explode -> groupBy, no orderBy, no
+Exchange -- over a cached, a bucketed (partition-pruned) or a plain store.
+
+The stop-independent shaping expressions are built once per SparkSession
+(``_shapes``): building a higher-order function's lambdas costs one Py4J
+round trip per expression node, which dominated a request's driver time.
+Per request only the literal columns are built: stop_id, service_id,
+route_short_name and trip_headsign are bound as Column literals, never
+formatted into SQL text.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+import weakref
+from functools import reduce
+from typing import Callable
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..jobs import denormalize
 from ..operators.params import PUBLIC_SERVICE_IDS
 
 NOT_IN_SERVICE = "NOT IN SERVICE"
@@ -40,59 +55,135 @@ def _valid_headsign(x: Column) -> Column:
     )
 
 
-def _exploded(denorm: DataFrame, stop_id: str | None,
-              filtered: bool = True,
-              valid_headsign: bool = True) -> DataFrame:
-    """Explode ``upcoming_services``; ``filtered`` applies P7 and (by
-    default) P8 (used by routes-for-stop and arrivals; get_timetable
-    shows all services, `Mongo/app.py:87-102`).  ``valid_headsign=False``
-    keeps the public-service filter but skips the NOT-IN-SERVICE/null
-    headsign exclusion — the reference's flat arrivals drill-down
-    (`Mongo/app.py:185-204`) matches the requested headsign directly and
-    never applies P8."""
-    if stop_id is None:
-        df = denorm
-    else:
-        # point_read prunes to one stop_bucket partition when the denorm
-        # came from a bucketed doc store (jobs/denormalize.py) — plain
-        # frames fall back to the pushed stop_id filter
-        from ..jobs.denormalize import point_read
+# Request values travel beside the document as literal columns named
+# ``_req_<field>``: the cached expressions read them as outer references,
+# so they never change with the request.
+def _req(field: str) -> Column:
+    return F.col(f"_req_{field}")
 
-        df = point_read(denorm, stop_id)
+
+def _requested(x: Column, field: str) -> Column:
+    """``x[field]`` equals the requested value, or none was requested.  A
+    NULL field never matches a requested value (``==`` semantics)."""
+    return _req(field).isNull() | (x[field] == _req(field))
+
+
+def _time(x: Column) -> Column:
+    """departure_time with NULL kept as the literal 'NaT'."""
+    return F.coalesce(x["departure_time"], F.lit("NaT"))
+
+
+def _grouped(services: Column, keys: tuple[str, ...],
+             value: Callable[[Column], Column]) -> Column:
+    """Per-document ``groupBy(keys).agg(sort_array(collect_list(value)))
+    .orderBy(keys)``: an array of ``struct(keys..., times)``, one element
+    per distinct ``keys`` tuple, ascending with NULL first (struct order
+    is orderBy's).  NULL keys group together, as in groupBy.  Each group
+    re-scans ``services``: groups x services per document, which is small
+    next to the cost of the job that reads it."""
+    groups = F.sort_array(F.array_distinct(F.transform(
+        services, lambda x: F.struct(*[x[k].alias(k) for k in keys]))))
+
+    def members(g: Column) -> Column:
+        return F.filter(services, lambda x: reduce(
+            Column.__and__, [x[k].eqNullSafe(g[k]) for k in keys]))
+
+    return F.transform(groups, lambda g: F.struct(
+        *[g[k].alias(k) for k in keys],
+        F.sort_array(F.transform(members(g), value)).alias("times"),
+    ))
+
+
+def _build_shapes() -> dict[str, Column]:
+    """One ``select`` column per lookup, keyed by ``_lookup``'s shape."""
+    from ..functions.gtfs_time import time_to_secs, wrap_display_time
+
     svc = F.col("upcoming_services")
-    if filtered:
-        if valid_headsign:
-            svc = F.filter(
-                svc, lambda x: _public_service(x) & _valid_headsign(x)
-            )
-        else:
-            svc = F.filter(svc, _public_service)
-    return df.select(
-        "stop_id", F.explode(svc).alias("s")
-    ).select(
-        "stop_id",
-        F.col("s.route_id").alias("route_id"),
-        F.col("s.route_short_name").alias("route_short_name"),
-        F.col("s.route_long_name").alias("route_long_name"),
-        F.col("s.trip_id").alias("trip_id"),
-        F.col("s.service_id").alias("service_id"),
-        F.col("s.trip_headsign").alias("trip_headsign"),
-        F.col("s.departure_time").alias("departure_time"),
-    )
+    shapes = {}
+
+    def display(x: Column) -> Column:
+        return F.coalesce(
+            wrap_display_time(time_to_secs(x["departure_time"])),
+            F.lit("NaT"))
+
+    shapes["timetable"] = F.inline(
+        _grouped(svc, ("route_long_name", "trip_headsign"), display))
+
+    routes = F.filter(svc, lambda x: _public_service(x)
+                      & _valid_headsign(x) & _requested(x, "service_id"))
+    shapes["routes"] = F.inline(F.sort_array(F.array_distinct(F.transform(
+        routes, lambda x: F.struct(
+            x["route_short_name"].alias("route_short_name"),
+            x["trip_headsign"].alias("trip_headsign"))))))
+
+    # P8 only when no headsign is requested: the flat drill-down matches a
+    # requested headsign (even 'NOT IN SERVICE') by direct equality
+    flat = F.filter(svc, lambda x: _public_service(x)
+                    & F.when(_req("trip_headsign").isNull(),
+                             _valid_headsign(x))
+                    .otherwise(x["trip_headsign"] == _req("trip_headsign"))
+                    & _requested(x, "route_short_name")
+                    & _requested(x, "service_id"))
+    shapes["flat"] = F.explode(F.sort_array(F.filter(
+        F.transform(flat, _time), lambda t: t != ""))
+    ).alias("departure_time")
+
+    arrivals = F.filter(svc, lambda x: _public_service(x)
+                        & _valid_headsign(x) & (_time(x) != "")
+                        & _requested(x, "route_short_name")
+                        & _requested(x, "trip_headsign")
+                        & _requested(x, "service_id"))
+    # route_id last in the sort key: it breaks ties between routes that
+    # share a (short name, headsign), e.g. two NULL short names
+    groups = _grouped(arrivals,
+                      ("route_short_name", "trip_headsign", "route_id"),
+                      _time)
+    shapes["grouped"] = F.inline(F.transform(groups, lambda g: F.struct(
+        g["route_id"].alias("route_id"),
+        g["route_short_name"].alias("route_short_name"),
+        g["trip_headsign"].alias("trip_headsign"),
+        g["times"].alias("times"),
+        F.size(g["times"]).cast("long").alias("count"),
+    )))
+    return shapes
+
+
+# Weak keys: a stopped and restarted session -- or one on a relaunched
+# JVM -- is a new SparkSession object, so it never reuses a Column built
+# in the old one, and a dropped session takes its entry with it.  Two
+# threads racing on a first lookup both build equal expressions; either
+# may win.
+_SHAPES: weakref.WeakKeyDictionary[SparkSession, dict[str, Column]] = (
+    weakref.WeakKeyDictionary())
+
+
+def _shapes(spark: SparkSession) -> dict[str, Column]:
+    """The four lookups' stop-independent shaping expressions, built on
+    first use in each session."""
+    shapes = _SHAPES.get(spark)
+    if shapes is None:
+        shapes = _SHAPES[spark] = _build_shapes()
+    return shapes
+
+
+def _lookup(denorm: DataFrame, stop_id: str, shape: str,
+            **req: str | None) -> DataFrame:
+    """``point_read`` of the stop's document, then the cached ``shape``
+    over it with the request values bound as ``_req_*`` literals."""
+    doc = denormalize.point_read(denorm, stop_id)
+    if req:
+        doc = doc.select("upcoming_services", *[
+            F.lit(v).cast("string").alias(f"_req_{k}")
+            for k, v in req.items()])
+    return doc.select(_shapes(denorm.sparkSession)[shape])
 
 
 def get_routes_for_stop(denorm: DataFrame, stop_id: str,
                         service_id: str | None = None) -> DataFrame:
     """A18/O11: distinct (route_short_name, trip_headsign) pairs at a stop,
-    optionally narrowed to one public service (`Mongo/app.py:116-149`)."""
-    df = _exploded(denorm, stop_id)
-    if service_id is not None:
-        df = df.filter(F.col("service_id") == service_id)
-    return (
-        df.select("route_short_name", "trip_headsign")
-        .distinct()
-        .orderBy("route_short_name", "trip_headsign")
-    )
+    optionally narrowed to one public service (`Mongo/app.py:116-149`),
+    ascending with NULL short names first.  P7 and P8 apply."""
+    return _lookup(denorm, stop_id, "routes", service_id=service_id)
 
 
 def get_arrivals_flat(
@@ -123,21 +214,11 @@ def get_arrivals_flat(
     truthy, so it survives the reference's ``[t for t in times if t]``
     and is counted ('NaT' also sorts after every HH:MM:SS string in both
     engines).  Only genuinely empty strings are dropped — the one falsy
-    value the reference's filter can see.
+    value the reference's filter can see.  Rows come in ascending order.
     """
-    df = _exploded(
-        denorm, stop_id, valid_headsign=(trip_headsign is None)
-    ).withColumn(
-        "departure_time", F.coalesce(F.col("departure_time"), F.lit("NaT"))
-    ).filter(F.col("departure_time") != "")
-    for col, val in (
-        ("route_short_name", route_short_name),
-        ("trip_headsign", trip_headsign),
-        ("service_id", service_id),
-    ):
-        if val is not None:
-            df = df.filter(F.col(col) == val)
-    return df.select("departure_time").orderBy("departure_time")
+    return _lookup(denorm, stop_id, "flat",
+                   route_short_name=route_short_name,
+                   trip_headsign=trip_headsign, service_id=service_id)
 
 
 def get_arrivals_grouped(
@@ -148,29 +229,17 @@ def get_arrivals_grouped(
     service_id: str | None = None,
 ) -> DataFrame:
     """A19: arrivals at a stop grouped by (route_id, headsign) with the
-    sorted time list and per-group count (`Mongo/app.py:206-244`).
+    sorted time list and per-group count (`Mongo/app.py:206-244`), ordered
+    by (route_short_name, trip_headsign, route_id) -- route_id breaks the
+    tie between routes sharing a short name (or a NULL one) and headsign.
+    P7 and P8 apply.
 
     Null departure_times are kept as 'NaT' in the time lists and counts,
     matching the reference's truthy stringified-NaT behavior — see
     ``get_arrivals_flat``."""
-    df = _exploded(denorm, stop_id).withColumn(
-        "departure_time", F.coalesce(F.col("departure_time"), F.lit("NaT"))
-    ).filter(F.col("departure_time") != "")
-    for col, val in (
-        ("route_short_name", route_short_name),
-        ("trip_headsign", trip_headsign),
-        ("service_id", service_id),
-    ):
-        if val is not None:
-            df = df.filter(F.col(col) == val)
-    return (
-        df.groupBy("route_id", "route_short_name", "trip_headsign")
-        .agg(
-            F.sort_array(F.collect_list("departure_time")).alias("times"),
-            F.count(F.lit(1)).alias("count"),
-        )
-        .orderBy("route_short_name", "trip_headsign")
-    )
+    return _lookup(denorm, stop_id, "grouped",
+                   route_short_name=route_short_name,
+                   trip_headsign=trip_headsign, service_id=service_id)
 
 
 def get_timetable(denorm: DataFrame, stop_id: str) -> DataFrame:
@@ -189,19 +258,6 @@ def get_timetable(denorm: DataFrame, stop_id: str) -> DataFrame:
     falls back to 'Unknown Route'/'Unknown Direction').  The HTTP edge
     maps a None key to the literal "null" (api/http.py — Flask's sorted
     jsonify cannot mix None and str keys; the reference app would 500
-    there)."""
-    from ..functions.gtfs_time import time_to_secs, wrap_display_time
-
-    df = _exploded(denorm, stop_id, filtered=False)
-    wrapped = F.coalesce(
-        wrap_display_time(time_to_secs(F.col("departure_time"))),
-        F.lit("NaT"),
-    )
-    return (
-        df.withColumn("display_time", wrapped)
-        .groupBy("route_long_name", "trip_headsign")
-        .agg(
-            F.sort_array(F.collect_list("display_time")).alias("times"),
-        )
-        .orderBy("route_long_name", "trip_headsign")
-    )
+    there).  Every service shows (no P7/P8), ordered by
+    (route_long_name, trip_headsign) with NULL keys first."""
+    return _lookup(denorm, stop_id, "timetable")

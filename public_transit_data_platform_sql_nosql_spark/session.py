@@ -13,6 +13,17 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """Half of physical memory, capped at 16g and at least 1g: a fixed 16g
+    heap lets the JVM outgrow a smaller machine and be OOM-killed.
+    ``SPARK_DRIVER_MEMORY`` overrides it."""
+    try:
+        ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, ValueError, OSError):  # no POSIX sysconf
+        return "16g"
+    return f"{min(16, max(1, ram // 2 // 2**30))}g"
+
+
 def get_spark(
     app_name: str = "transit-analytics-engine",
     master: str | None = None,
@@ -50,7 +61,9 @@ def get_spark(
         # (nanos since epoch) and convert explicitly where needed
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEMORY")
+                or _default_driver_memory())
     )
     if files_max_partition_bytes is not None:
         builder = (

@@ -211,23 +211,60 @@ def test_get_timetable_null_group_keys_serialize(web):
 
 
 def test_one_spark_job_per_timetable_request(web, spark):
-    """The 404 existence check is a driver-side set probe, not a Spark
-    job: an endpoint call runs exactly as many jobs as its underlying
-    query collect does alone (AQE may split one action into several
-    jobs, so compare — don't assert a literal 1)."""
+    """Each timetable route is ONE narrow Spark job (a point read shaped
+    with array expressions, no shuffle), and the unknown-stop answers
+    are a driver-side set probe that runs none."""
     from public_transit_data_platform_sql_nosql_spark.plans.inspect import (
         jobs_run,
     )
 
+    from urllib.parse import urlencode
+
     client, _, denorm = web
-    baseline = jobs_run(
-        spark, lambda: tt.get_timetable(denorm, STOP).collect())
-    via_http = jobs_run(
-        spark, lambda: client.get(f"/get_timetable?stop_id={STOP}"))
-    assert via_http == baseline
-    # and the unknown-stop 404 itself costs zero Spark jobs
-    assert jobs_run(
-        spark, lambda: client.get("/get_timetable?stop_id=nope")) == 0
+    g = next(r for r in tt.get_arrivals_grouped(denorm, STOP).collect()
+             if r["route_short_name"] is not None)
+    flat = "/get_arrivals?" + urlencode({
+        "stop_id": STOP, "route_short_name": g["route_short_name"],
+        "trip_headsign": g["trip_headsign"]})
+    for url in (f"/get_timetable?stop_id={STOP}",
+                f"/get_routes_for_stop?stop_id={STOP}",
+                f"/get_arrivals?stop_id={STOP}", flat):
+        resp = []
+        assert jobs_run(spark, lambda: resp.append(client.get(url))) == 1, url
+        assert resp[0].status_code == 200 and resp[0].get_json(), url
+    for route in ("/get_timetable", "/get_routes_for_stop", "/get_arrivals"):
+        assert jobs_run(
+            spark, lambda: client.get(f"{route}?stop_id=nope")) == 0, route
+
+
+def test_grouped_arrivals_ties_order_by_route_id(web, spark):
+    """Two routes with NULL short names under one headsign tie on
+    (route_short_name, trip_headsign); route_id orders them, in the query
+    and in the HTTP body, whatever the document's order."""
+    from pyspark.sql import types as T
+
+    _, api, denorm = web
+    fields = ("route_id", "route_short_name", "route_long_name", "trip_id",
+              "service_id", "trip_headsign", "departure_time")
+    svc = T.StructType([T.StructField(f, T.StringType()) for f in fields])
+    doc = spark.createDataFrame(
+        [("tie", [("r2", None, "Two", "t1", "1", "North", "08:00:00"),
+                  ("r1", None, "One", "t2", "1", "North", "09:00:00"),
+                  ("r5", "5", "Five", "t3", "1", "North", "07:00:00"),
+                  ("r2", None, "Two", "t4", "1", "North", "10:00:00")])],
+        T.StructType([T.StructField("stop_id", T.StringType()),
+                      T.StructField("upcoming_services", T.ArrayType(svc))]))
+    rows = tt.get_arrivals_grouped(doc, "tie").collect()
+    assert [(r["route_short_name"], r["route_id"], r["count"])
+            for r in rows] == [(None, "r1", 1), (None, "r2", 2),
+                               ("5", "r5", 1)]
+    client = create_app(api, doc).test_client()
+    body = client.get("/get_arrivals?stop_id=tie").get_json()
+    assert [(g["route_short_name"], g["route_id"], g["times"])
+            for g in body["groups"]] == [
+        ("", "r1", ["09:00:00"]), ("", "r2", ["08:00:00", "10:00:00"]),
+        ("5", "r5", ["07:00:00"])]
+    assert body["total_count"] == 4
 
 
 def test_wrap_clock_time():

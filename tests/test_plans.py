@@ -60,6 +60,7 @@ def test_q2_service_filter_pushed_before_agg(gtfs):
     # (ADVICE r14).
     import re
 
+    assert "Aggregate" in optimized, optimized
     below = optimized[optimized.rindex("Aggregate"):]
     assert ("service_id" in below) or \
         re.search(r"o_orderkey#\d+L? % 3\b", below), optimized
@@ -113,19 +114,26 @@ def test_bucketed_doc_store_point_read_prunes_partitions(spark, tmp_path):
     assert got[0]["stop_id"] == want[0]["stop_id"]
     assert (got[0]["upcoming_services"] == want[0]["upcoming_services"])
 
-    # the timetable query layer routes its point lookups through
-    # point_read, so the same pruning reaches every endpoint query
+    # every timetable lookup routes through point_read and shapes the one
+    # document it returns: one pruned scan, no shuffle, the plain
+    # layout's rows in the same order
+    import re
+
     from public_transit_data_platform_sql_nosql_spark.queries import (
         timetable as tt,
     )
 
-    grouped = tt.get_arrivals_grouped(store, "17")
-    assert "stop_bucket" in executed_plan(grouped)
-    b = [r.asDict(recursive=True) for r in grouped.collect()]
-    p = [r.asDict(recursive=True)
-         for r in tt.get_arrivals_grouped(
-             spark.read.parquet(plain_dir), "17").collect()]
-    assert b == p and len(b) > 0
+    plain = spark.read.parquet(plain_dir)
+    for fn in (tt.get_timetable, tt.get_routes_for_stop,
+               tt.get_arrivals_grouped, tt.get_arrivals_flat):
+        df = fn(store, "17")
+        plan = executed_plan(df)
+        parts = re.findall(r"PartitionFilters: \[([^\]]*)\]", plan)
+        assert any("stop_bucket" in p for p in parts), (fn.__name__, plan)
+        assert "Exchange" not in plan, (fn.__name__, plan)
+        b = [r.asDict(recursive=True) for r in df.collect()]
+        p = [r.asDict(recursive=True) for r in fn(plain, "17").collect()]
+        assert b == p and len(b) > 0, fn.__name__
 
 
 def test_trips_broadcast_is_size_gated(spark, gtfs):
